@@ -21,11 +21,14 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from functools import partial
 from pathlib import Path
 
 from dbdiff_spark.catalog import FileCatalog, JdbcCatalog, TESTDATA_KEYS, jdbc_table_auto
 from dbdiff_spark.config import load_configuration
-from dbdiff_spark.diff import DiffMode
+from dbdiff_spark.diff import DiffMode, apply_diff
+from dbdiff_spark.io import run_jobs
+from dbdiff_spark.normalize import normalize_to_strings
 from dbdiff_spark.session import get_spark
 from dbdiff_spark.sinks.console import print_diffs
 from dbdiff_spark.sinks.xlsx import default_output_name, maybe_open, write_diff_xlsx
@@ -63,6 +66,29 @@ def _load_sources(spark, args):
     # (falls back per table to a single-connection read)
     sources = {t: jdbc_table_auto(spark, conf.db, t, keys.get(t)) for t in tables}
     return sources, keys
+
+
+def _apply_table(spark, before, after, tname, res, mode, out: Path) -> str:
+    """Rebuild ``tname``'s after-state from the before snapshot plus its
+    diff (``apply_diff``), write it under ``out`` and check it equals
+    the after snapshot; returns the ``[Apply]`` line."""
+    base_df = before.load(spark, tname)
+    target = after.load(spark, tname)
+    if mode is DiffMode.STRING:
+        # STRING-mode diff rows carry normalized renderings; apply in
+        # the same domain so types line up
+        base_df = normalize_to_strings(base_df)
+        target = normalize_to_strings(target)
+    # target_cols: under schema drift the diff carries the union schema;
+    # reconstruct in the AFTER table's columns or the verify below
+    # reports a false MISMATCH
+    rebuilt = apply_diff(base_df, res.df, res.key_columns, target_cols=target.columns)
+    rebuilt.write.mode("overwrite").parquet(str(out))
+    # the written schema skips the read-back's inference job
+    rb = spark.read.schema(rebuilt.schema).parquet(str(out))
+    mismatch = rb.exceptAll(target).count() + target.exceptAll(rb).count()
+    status = "OK" if mismatch == 0 else f"MISMATCH({mismatch})"
+    return f"[Apply] {tname}: reconstructed -> {out} [{status}]"
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -360,39 +386,25 @@ def main(argv: list[str] | None = None) -> int:
             where=where or None, tolerance=tolerance or None,
             ignore=ignore or None,
         )
-        print_diffs(results)
+        rows = print_diffs(results)
         out_name = args.o or default_output_name()
-        write_diff_xlsx(results, out_name)
+        write_diff_xlsx(results, out_name, rows=rows)
         print(f"[ResultOutput] See {out_name}")
         maybe_open(out_name, args.auto_open)
 
         if args.apply_dir:
-            from dbdiff_spark.diff import apply_diff
-            from dbdiff_spark.normalize import normalize_to_strings
-
             apply_root = Path(args.apply_dir) / f"gen{generation}"
-            for tname, res in results.items():
-                if tname not in before.tables or tname not in after.tables:
-                    continue  # added/dropped tables have no apply target
-                base_df = before.load(spark, tname)
-                target = after.load(spark, tname)
-                if mode is DiffMode.STRING:
-                    # STRING-mode diff rows carry normalized renderings;
-                    # apply in the same domain so types line up
-                    base_df = normalize_to_strings(base_df)
-                    target = normalize_to_strings(target)
-                # target_cols: under schema drift the diff carries the
-                # union schema; reconstruct in the AFTER table's columns
-                # or the verify below reports a false MISMATCH
-                rebuilt = apply_diff(
-                    base_df, res.df, res.key_columns,
-                    target_cols=target.columns,
-                )
-                rebuilt.write.mode("overwrite").parquet(str(apply_root / tname))
-                rb = spark.read.parquet(str(apply_root / tname))
-                mismatch = rb.exceptAll(target).count() + target.exceptAll(rb).count()
-                status = "OK" if mismatch == 0 else f"MISMATCH({mismatch})"
-                print(f"[Apply] {tname}: reconstructed -> {apply_root / tname} [{status}]")
+            # added/dropped tables have no apply target
+            names = sorted(set(results) & set(before.tables) & set(after.tables))
+            # one table's apply-and-verify per thunk, concurrently; the
+            # lines print in table order once every table has finished
+            lines = run_jobs(*(
+                partial(_apply_table, spark, before, after, t, results[t], mode,
+                        apply_root / t)
+                for t in names
+            ))
+            for line in lines:
+                print(line)
 
         before = after  # manifest swap (main.go:83) — no data movement
         generation += 1

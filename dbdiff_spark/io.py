@@ -171,15 +171,24 @@ def run_jobs(*thunks):
 
     Only for actions with NO data dependency (different output paths,
     no shared mutable state).  Results return in argument order;
-    the first exception propagates after all threads finish (no thread
-    is left orphaned mid-write)."""
+    the first exception propagates after all thunks finish (no thread
+    is left orphaned mid-write).
+
+    At most ``defaultParallelism`` thunks run at once: a per-table
+    fan-out over a database with hundreds of tables must not submit
+    hundreds of concurrent jobs, and more concurrent jobs than cores
+    only queue inside the scheduler anyway."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import SparkContext
 
     if not thunks:  # ThreadPoolExecutor(max_workers=0) raises (r12 ADVICE)
         return []
     if len(thunks) == 1:
         return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    sc = SparkContext._active_spark_context
+    width = len(thunks) if sc is None else min(len(thunks), sc.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=width) as pool:
         futures = [pool.submit(t) for t in thunks]
         # collect every outcome before raising so a failing sibling
         # cannot leave a half-running write behind the caller's back

@@ -13,18 +13,21 @@ No spreadsheet library ships in this image, so this module emits the
 (public, ECMA-376) SpreadsheetML zip format directly — a workbook with
 one sheet, inline strings, and the four cell styles above.  Driver-side
 code: the diff DataFrame is collected (changed rows only), exactly the
-reference's own assumption.
+reference's own assumption — or, in a CLI round, rendered from the rows
+the console sink already collected.
 """
 
 from __future__ import annotations
 
+import logging
 import zipfile
 from datetime import datetime
 from pathlib import Path
 from xml.sax.saxutils import escape
 
-from dbdiff_spark.diff import DELETED, INSERTED, UPDATED, DiffResult, ordered_output
+from dbdiff_spark.diff import DELETED, INSERTED, UPDATED, DiffResult
 from dbdiff_spark.normalize import NULL_SENTINEL
+from dbdiff_spark.sinks.console import collect_rows
 
 _CONTENT_TYPES = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">
@@ -139,14 +142,27 @@ def write_diff_xlsx(
     results: dict[str, DiffResult],
     output_path: str | Path,
     max_rows_per_table: int = 10_000,
+    rows: dict[str, list] | None = None,
 ) -> Path:
-    """Render every table's diff into one sheet, reference block layout."""
+    """Render every table's diff into one sheet, reference block layout.
+
+    ``rows`` is what :func:`dbdiff_spark.sinks.console.print_diffs`
+    returned for the same ``results``; given, no Spark job runs here.
+    Each table shows at most ``max_rows_per_table`` rows."""
+    if rows is None:
+        rows = collect_rows(results, max_rows_per_table)
+        for table, table_rows in rows.items():
+            if len(table_rows) > max_rows_per_table:
+                logging.getLogger(__name__).warning(
+                    "%s: more than %d changed rows; the xlsx shows the first %d",
+                    table, max_rows_per_table, max_rows_per_table,
+                )
     sheet = _Sheet()
     ri = OFFSET_ROW
     for table in sorted(results):
         res = results[table]
-        rows = ordered_output(res).limit(max_rows_per_table).collect()
-        if not rows:
+        table_rows = rows[table][:max_rows_per_table]
+        if not table_rows:
             continue
         cols = res.value_columns
         # table-name block
@@ -159,7 +175,7 @@ def write_diff_xlsx(
             sheet.set(ri, OFFSET_COL + 1 + i, cname, STYLE_HEADER)
         ri += 1
         # data rows
-        for r in rows:
+        for r in table_rows:
             label = _STATUS_CELL.get((r["diff_status"], r["is_before"]))
             if label is None:
                 continue

@@ -28,6 +28,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbdiff_spark.diff import (
     DELETED,
@@ -124,6 +125,21 @@ class Snapshot:
     # table → hive partition columns the snapshot was written with
     # (predicates on them in diff_snapshots(where=...) partition-prune)
     partitions: dict[str, list[str]] = field(default_factory=dict)
+    # table → JSON of the schema its parquet files were written with.
+    # Loads hand it to the reader, which skips schema inference (a Spark
+    # job per read) and, as inference does, marks every field nullable;
+    # parquet keeps field metadata (char/varchar lengths), so the loaded
+    # schema is the inferred one.  Unpartitioned parquet tables only:
+    # ORC drops field metadata, and partition column types are inferred
+    # from directory names.  Tables without an entry, and manifests
+    # written before the field existed, load by inference.
+    schemas: dict[str, dict] = field(default_factory=dict)
+
+    def _reader(self, spark: SparkSession, table: str):
+        reader = spark.read.format(self.format)
+        if table in self.schemas:
+            reader = reader.schema(T.StructType.fromJson(self.schemas[table]))
+        return reader
 
     def load(self, spark: SparkSession, table: str) -> DataFrame:
         if table in self.catalog_tables:
@@ -134,7 +150,7 @@ class Snapshot:
                 # fall back to the path (bucketing metadata lost, diff
                 # still correct — just pays the exchange again)
                 pass
-        return spark.read.format(self.format).load(self.tables[table])
+        return self._reader(spark, table).load(self.tables[table])
 
     def load_groups_pruned(
         self, spark: SparkSession, table: str, changed_groups: list[int]
@@ -194,13 +210,9 @@ class Snapshot:
             # listing succeeded and every file parsed: all of this
             # side's changed-group rows live on the other side (pure
             # inserts/deletes): empty frame, full schema
-            return (
-                local_frame(
-                    spark, [], spark.read.parquet(self.tables[table]).schema
-                ),
-                True,
-            )
-        return spark.read.parquet(*files), True
+            full = self._reader(spark, table).load(self.tables[table])
+            return local_frame(spark, [], full.schema), True
+        return self._reader(spark, table).load(files), True
 
     @staticmethod
     def _list_data_files(
@@ -244,6 +256,7 @@ class Snapshot:
                     "group_hash_mod": self.group_hash_mod,
                     "format": self.format,
                     "partitions": self.partitions,
+                    "schemas": self.schemas,
                 },
                 indent=2,
             )
@@ -279,6 +292,7 @@ class Snapshot:
             group_hash_mod=data.get("group_hash_mod", 0),
             format=data.get("format", "parquet"),
             partitions=data.get("partitions", {}),
+            schemas=data.get("schemas", {}),
         )
 
 
@@ -409,6 +423,8 @@ class SnapshotStore:
             snap.tables[name] = path
             snap.keys[name] = key
             snap.columns[name] = list(df.columns)
+            if format == "parquet" and name not in partition_by:
+                snap.schemas[name] = df.schema.jsonValue()
             if fingerprintable:
                 # count falls out of the same tiny aggregation for free
                 fps = _group_fingerprints(

@@ -28,3 +28,40 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def job_counter(spark):
+    """``with job_counter() as ids:`` — when the block ends, ``ids``
+    lists the Spark jobs started inside it: those in a job group set on
+    this thread for the block, plus any started with no group (threads
+    such as ``io.run_jobs`` workers do not inherit a job group)."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def settle():
+        # job records reach the status store through the asynchronous
+        # listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    @contextlib.contextmanager
+    def count():
+        settle()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted block")
+        ids: list[int] = []
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            settle()
+            ids.extend(sorted(
+                set(tracker.getJobIdsForGroup(group))
+                | (set(tracker.getJobIdsForGroup(None)) - ungrouped)
+            ))
+
+    return count

@@ -140,3 +140,43 @@ def test_training_shard_export_balanced_ordered_resumable(spark, sf_dir, tmp_pat
         lo = boundaries[k]
     with pytest.raises(ValueError):
         write_training_shards(idx.limit(0), str(tmp_path / "x"), 2, pos_col)
+
+
+def test_cut_table_warns_and_both_sinks_show_the_same_first_rows(
+    spark, tmp_path, capsys, caplog
+):
+    """A table with more than max_rows changed rows gets one [Warn] line
+    after its block; the xlsx renders the console's rows, cut the same
+    way.  A table with exactly max_rows is not cut."""
+    from dbdiff_spark.sinks.console import print_diffs
+
+    res = _mini_diff(spark)  # 4 rows: an UPDATED pair, a DELETED, an INSERTED
+    rows = print_diffs({"mytable": res}, max_rows=3)
+    assert capsys.readouterr().out.splitlines() == [
+        "===mytable===",
+        "UPDATED[Before] : ([id:1][s:a][t:<NULL>])",
+        "UPDATED[After ] : ([id:1][s:a2][t:<NULL>])",
+        "DELETED         : ([id:2][s:b][t:x])",
+        "[Warn] mytable: more than 3 changed rows; console and xlsx show the first 3",
+    ]
+    def sheet_xml(path):
+        with zipfile.ZipFile(path) as z:
+            return z.read("xl/worksheets/sheet1.xml")
+
+    write_diff_xlsx(
+        {"mytable": res}, tmp_path / "cut.xlsx", max_rows_per_table=3, rows=rows
+    )
+    sheet = ET.fromstring(sheet_xml(tmp_path / "cut.xlsx"))
+    labels = [
+        c.find(f"{NS}is/{NS}t").text
+        for c in sheet.iter(f"{NS}c") if c.get("r").startswith("B")
+    ]
+    assert labels == ["TableName", "(diff)", "UPD BEFORE", "UPD  AFTER", "DELETED"]
+    # standalone, the xlsx sink collects for itself and logs the cut
+    with caplog.at_level("WARNING"):
+        write_diff_xlsx({"mytable": res}, tmp_path / "alone.xlsx", max_rows_per_table=3)
+    assert "mytable: more than 3 changed rows" in caplog.text
+    assert sheet_xml(tmp_path / "alone.xlsx") == sheet_xml(tmp_path / "cut.xlsx")
+
+    print_diffs({"mytable": res}, max_rows=4)
+    assert "[Warn]" not in capsys.readouterr().out

@@ -1,6 +1,7 @@
 """Snapshot store + multi-table diff tests (SURVEY §2 ops #4/#9, §1.5.3
 table-added/dropped handling, packed union sink shape)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbdiff_spark.catalog import FileCatalog, TESTDATA_KEYS
@@ -706,3 +707,121 @@ def test_incremental_ignore_no_pk_keeps_full_key_group_filter(spark, tmp_path):
     got = {(r["diff_status"], r["v"]) for r in res.collect()}
     assert (DELETED, "v7") in got and (INSERTED, "CHANGED") in got
     assert len(got) == 2  # nothing else surfaced
+
+
+def _wide_typed_frame(spark, tmp_path):
+    """char/varchar columns (as a catalog table delivers them: strings
+    carrying their declared type in field metadata) beside
+    timestamp_ntz, decimal, array, struct and map columns."""
+    import uuid
+
+    name = f"charvar_{uuid.uuid4().hex[:8]}"
+    spark.sql(
+        f"CREATE TABLE {name} (id INT, c CHAR(5), v VARCHAR(8), "
+        f"av ARRAY<VARCHAR(3)>) USING parquet LOCATION '{tmp_path / name}'"
+    )
+    spark.sql(f"INSERT INTO {name} VALUES (1, 'ab', 'xyz', array('p', NULL)), "
+              f"(2, NULL, 'q', NULL)")
+    return spark.sql(
+        f"""SELECT id, c, v, av,
+                   timestamp_ntz'2020-01-02 03:04:05' + make_interval(0, 0, 0, id) AS ntz,
+                   CAST(id AS DECIMAL(12, 3)) AS dec,
+                   array(id, NULL) AS arr,
+                   named_struct('a', id, 'b', named_struct('c', c)) AS st,
+                   map('k', id) AS m,
+                   array(named_struct('x', v)) AS aos
+            FROM {name}"""
+    )
+
+
+def test_manifest_schema_loads_like_inference_with_zero_jobs(
+    spark, sf_dir, tmp_path, job_counter
+):
+    """Loading a table with its manifest schema gives the schema parquet
+    inference reads back, and starts no Spark job."""
+    cat = FileCatalog(spark, sf_dir, TESTDATA_KEYS)
+    tables = cat.list_tables()
+    sources = {t: cat.load(t) for t in tables}
+    keys = cat.primary_keys(tables)
+    sources["wide"] = _wide_typed_frame(spark, tmp_path)
+    keys["wide"] = ["id"]
+    root = str(tmp_path / "snap")
+    SnapshotStore(spark).collect(sources, keys, root)
+    loaded = Snapshot.load_manifest(root)
+    assert set(loaded.schemas) == set(sources)
+    for t in sources:
+        with job_counter() as ids:
+            got = loaded.load(spark, t).schema
+        assert ids == [], t
+        inferred = spark.read.parquet(loaded.tables[t]).schema
+        assert got.jsonValue() == inferred.jsonValue(), t
+    wide = {f.name: f for f in loaded.load(spark, "wide").schema.fields}
+    assert wide["c"].metadata == {"__CHAR_VARCHAR_TYPE_STRING": "char(5)"}
+    assert wide["ntz"].dataType.simpleString() == "timestamp_ntz"
+    assert loaded.load(spark, "wide").orderBy("id").first()["c"] == "ab   "
+
+
+def test_manifest_without_schemas_loads_by_inference(spark, tmp_path, job_counter):
+    """Manifests written before the schemas field existed load by
+    parquet inference and diff exactly as before."""
+    import json
+
+    from dbdiff_spark.snapshot import MANIFEST_NAME
+
+    before, after = make_snapshots(spark, tmp_path)
+    for side in ("before", "after"):
+        manifest = tmp_path / side / MANIFEST_NAME
+        data = json.loads(manifest.read_text())
+        assert set(data.pop("schemas")) == set(data["tables"])
+        manifest.write_text(json.dumps(data))
+    old_before = Snapshot.load_manifest(str(tmp_path / "before"))
+    old_after = Snapshot.load_manifest(str(tmp_path / "after"))
+    assert old_before.schemas == {} and old_after.schemas == {}
+    with job_counter() as ids:
+        inferred = old_before.load(spark, "t1").schema
+    assert ids, "a manifest without schemas should load by inference"
+    assert inferred == before.load(spark, "t1").schema
+
+    def rows(b, a):
+        res = diff_snapshots(spark, b, a, mode=DiffMode.TYPED)
+        return {t: sorted(map(tuple, r.df.collect())) for t, r in res.items()}
+
+    assert rows(old_before, old_after) == rows(before, after)
+
+
+@pytest.mark.parametrize("layout", ["parquet", "bucketed", "partitioned", "orc"])
+def test_diff_by_snapshot_layout(spark, tmp_path, layout):
+    """Every snapshot layout diffs to the same rows; only plain and
+    bucketed parquet record a manifest schema (ORC drops field
+    metadata; partition column types come from directory names)."""
+    kw = {
+        "parquet": {},
+        "bucketed": {"buckets": 2},
+        "partitioned": {"partition_by": {"t": ["dt"]}},
+        "orc": {"format": "orc"},
+    }[layout]
+    schema = "id int, dt string, v double"
+    rows = [(i, f"d{i % 3}", i * 1.5) for i in range(12)]
+    changed = [r for r in rows if r[0] != 2]
+    changed[1] = (1, "d1", -1.0)
+    changed.append((20, "d2", 0.0))
+    store = SnapshotStore(spark)
+    before = store.collect(
+        {"t": spark.createDataFrame(rows, schema)}, {"t": ["id"]},
+        str(tmp_path / "b"), **kw,
+    )
+    after = store.collect(
+        {"t": spark.createDataFrame(changed, schema)}, {"t": ["id"]},
+        str(tmp_path / "a"), **kw,
+    )
+    assert ("t" in before.schemas) == (layout in ("parquet", "bucketed"))
+    for mode in (DiffMode.TYPED, DiffMode.STRING):
+        res = diff_snapshots(spark, before, after, mode=mode)["t"]
+        got = sorted(
+            (str(r["id"]), r["diff_status"], r["is_before"], float(r["v"]))
+            for r in res.df.collect()
+        )
+        assert got == [
+            ("1", UPDATED, False, -1.0), ("1", UPDATED, True, 1.5),
+            ("2", DELETED, True, 3.0), ("20", INSERTED, False, 0.0),
+        ], (layout, mode)
